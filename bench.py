@@ -258,7 +258,7 @@ HEADLINE = [
 
 # Gate-OFF measurement arm (r17, per the r16 verdict's top task): every
 # headline key whose operator chain carries a bounded driver fast path
-# (a *_DRIVER_MAX_* twin gate) is re-timed min-of-N with
+# (a twin gate, ops/driver_exact.py) is re-timed min-of-N with
 # SPARK_GRAFT_DRIVER_GATE=0 — the twins skipped, the DISTRIBUTED arms
 # executing — and the numbers land in the artifact's "gate_off" block.
 # At sf0.1 the twins make these keys single-digit-millisecond
@@ -288,7 +288,6 @@ DRIVER_GATED = [
     "recsys_user_brand_recs",
     "recsys_topk_model",
     "recsys_als_factors",
-    "recsys_eval_coverage",
     "embed_lof_bucketed",
     "stats_gmm2_price",
     "stats_spearman_qty_price",

@@ -1916,10 +1916,8 @@ def robust_moments(
         F.col(value_col).cast("double").alias("_x")
     )
     from metadata_etl_framework_spark.ops.driver_exact import (
+        DRIVER_MAX_ROWS,
         driver_gates_enabled,
-    )
-    from metadata_etl_framework_spark.ops.glm import (
-        GLM_DRIVER_MAX_ROWS,
     )
 
     if driver_gates_enabled():
@@ -1939,8 +1937,8 @@ def robust_moments(
         # zero extra passes.
         import numpy as np
 
-        tbl = base.limit(GLM_DRIVER_MAX_ROWS + 1).toArrow()
-        if 0 < tbl.num_rows <= GLM_DRIVER_MAX_ROWS:
+        tbl = base.limit(DRIVER_MAX_ROWS + 1).toArrow()
+        if 0 < tbl.num_rows <= DRIVER_MAX_ROWS:
             xs = (
                 tbl.column("_x")
                 .to_numpy(zero_copy_only=False)

@@ -28,6 +28,38 @@ wrong; this module centralizes their exact driver-side equivalents:
 Everything here is plain NumPy + ``decimal`` — no Spark imports — so
 the ops modules can unit-test the kernels against their distributed
 twins directly.
+
+This module also owns the venue decision every twin gate makes:
+``driver_gates_enabled() and n <= <limit>``, read at call time.
+
+- ``driver_gates_enabled()`` is the one switch. The environment
+  variable it reads is the only way to force the distributed arms
+  (the bench's gate-off block and the parity tests use it).
+- ``DRIVER_MAX_ROWS`` is the shared row budget (2M rows). At or under
+  it, an operator's narrow projection (a few numeric columns — three
+  doubles are ≤ ~48 MB at the budget, as columnar Arrow batches rather
+  than pickled Rows) transfers in ONE bounded collect, and every
+  iterative pass (IRLS/EM steps, ALS half-rounds, Cox/KM passes,
+  PageRank iterations) runs vectorized on the driver in milliseconds.
+  The distributed arm pays one full aggregation job per pass instead
+  (0.8–2 s each for the GLM trainers at sf0.1 on local[32]; ~5–7 s of
+  broadcast-build + shuffle jobs for the ALS halves). Above the budget
+  the distributed plans are unchanged — the right plan at fact scale,
+  where a collect would be the bug, not the optimization. The value
+  equals ``ops/materialize.py::BCAST_MAX_ROWS`` (same transfer budget),
+  but that constant decides broadcast joins, not venues.
+- ``DRIVER_MAX_EDGES`` is the shared edge budget (500k edges) of the
+  pure-integer graph twins: the ``connected_components`` union-find
+  (``dedup.py``) and the Louvain/greedy move rounds (``graph.py``). At
+  or under it, the edge list transfers in one Arrow ``toPandas``
+  (~16 B/edge for numeric ids) and the driver loop's dicts over touched
+  nodes (~100 B/entry boxed) stay well under ~100 MB of heap. The
+  distributed arm pays ~6 scheduled jobs per round instead (the benched
+  two-level Louvain spent >10 s on scheduling over a 6.7k-node graph at
+  sf0.1 on local[32]; the twin computes the same labels in ~1 s).
+- Limits on a different quantity stay beside their operator: the
+  500k-word BPE finish (``text.py``) and the CF/LOF item, pair and
+  cell caps (``recsys.py``, ``similarity.py``).
 """
 
 from __future__ import annotations
@@ -38,6 +70,8 @@ from decimal import ROUND_HALF_UP, Decimal
 import numpy as np
 
 __all__ = [
+    "DRIVER_MAX_ROWS",
+    "DRIVER_MAX_EDGES",
     "driver_gates_enabled",
     "spark_round",
     "spark_round_f64",
@@ -53,15 +87,19 @@ def driver_gates_enabled() -> bool:
     """True unless ``SPARK_GRAFT_DRIVER_GATE=0``.
 
     The bench's gate-OFF measurement arm: with the env var set to 0,
-    every bounded driver fast path (the ``*_DRIVER_MAX_*`` twin gates)
-    is skipped and the DISTRIBUTED arms run — the plans that execute
-    at fact scale — so ``BENCH_DETAIL_r*.json``'s ``gate_off`` block
-    records their cost every round instead of the twins hiding it.
+    every bounded driver fast path (each twin gate) is skipped and the
+    DISTRIBUTED arms run — the plans that execute at fact scale — so
+    ``BENCH_DETAIL_r*.json``'s ``gate_off`` block records their cost
+    every round instead of the twins hiding it.
     Read at call time (not import time) so the bench can flip it
     between timing blocks inside one process. Results are identical
     either way — the twins are bit-exact replicas; only the execution
     venue changes."""
     return os.environ.get("SPARK_GRAFT_DRIVER_GATE", "1") != "0"
+
+
+DRIVER_MAX_ROWS = 2_000_000
+DRIVER_MAX_EDGES = 500_000
 
 
 _M31 = 2147483648  # 2^31

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_etl_framework_spark.ops.driver_exact import (
+    DRIVER_MAX_ROWS,
     driver_gates_enabled,
 )
 from metadata_etl_framework_spark.ops.exact_agg import exact_pico_sums
@@ -88,20 +89,14 @@ def _solve(h: "list[list[float]]", g: "list[float]") -> "list[float]":
 
 
 # --------------------------------------------------------------------------
-# Driver fast path (the ALS / graph move-round convention): at or under
-# GLM_DRIVER_MAX_ROWS usable rows, the (_y, _x…) projection transfers in
-# ONE bounded Arrow collect (d ≤ max_features+1 double columns) and every
-# IRLS/EM/scoring pass runs vectorized on the driver in milliseconds —
-# versus one full aggregation job per pass at the benched scale (each
-# pass was 0.8–2 s of scan + exact-agg + job scheduling at sf0.1 on
-# local[32]). The numeric kernels are the exact driver twins of the
-# pico-int pipeline (ops/driver_exact.py: HALF_UP-on-shortest-decimal
-# rounding, exact big-int sums), so the arms reproduce the distributed
-# loops bit-for-bit and are parity-tested against them with the gate
-# toggled (tests/test_glm.py). Above the gate the distributed passes are
-# unchanged — the right plan at fact scale, where a collect would be the
-# bug, not the optimization.
-GLM_DRIVER_MAX_ROWS = 2_000_000
+# Driver fast path (gate rationale at ops/driver_exact.py): at or under
+# DRIVER_MAX_ROWS usable rows, the (_y, _x…) projection transfers in ONE
+# bounded Arrow collect (d ≤ max_features+1 double columns) and every
+# IRLS/EM/scoring pass runs vectorized on the driver. The numeric kernels
+# are the exact driver twins of the pico-int pipeline (HALF_UP-on-
+# shortest-decimal rounding, exact big-int sums), so the arms reproduce
+# the distributed loops bit-for-bit and are parity-tested against them
+# with the gate toggled (tests/test_glm.py).
 
 
 def _driver_arrays(base: DataFrame, cols: "list[str]") -> dict:
@@ -233,7 +228,6 @@ def logistic_train(
     iterations: int = 3,
     ridge: float = 1e-6,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Train P(y=1|x) = σ(β₀ + Σ βⱼ·xⱼ) by ``iterations`` Newton/IRLS
     steps from β = 0.
@@ -289,14 +283,9 @@ def logistic_train(
     if n_rows == 0:
         base.unpersist()
         raise ValueError("logistic_train: no usable rows")
-    gate = (
-        GLM_DRIVER_MAX_ROWS
-        if driver_gate_rows is None
-        else int(driver_gate_rows)
-    )
-    if driver_gates_enabled() and n_rows <= gate:
+    if driver_gates_enabled() and n_rows <= DRIVER_MAX_ROWS:
         # bounded driver fast path (gate rationale at
-        # GLM_DRIVER_MAX_ROWS); bit-identical to the loop below
+        # DRIVER_MAX_ROWS); bit-identical to the loop below
         arrs = _driver_arrays(
             base, ["_y"] + [f"_x{j}" for j in range(1, d)]
         )
@@ -402,7 +391,6 @@ def linear_cv(
     n_folds: int = 4,
     ridge: float = 0.0,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """K-fold cross-validated ridge/OLS — per-fold AND pooled held-out
     metrics in TWO data scans total, for all K models at once:
@@ -457,20 +445,15 @@ def linear_cv(
     ridge_i = int(
         Decimal(repr(float(ridge))).scaleb(12).to_integral_value()
     )
-    gate = (
-        GLM_DRIVER_MAX_ROWS
-        if driver_gate_rows is None
-        else int(driver_gate_rows)
-    )
     # both passes read one persisted projection; released at exit
     base = base.persist()
     try:
         n_rows = base.count()
         if n_rows == 0:
             raise ValueError("linear_cv: no usable rows")
-        if driver_gates_enabled() and n_rows <= gate:
+        if driver_gates_enabled() and n_rows <= DRIVER_MAX_ROWS:
             # bounded driver fast path (gate rationale at
-            # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
+            # DRIVER_MAX_ROWS); bit-identical to the passes below
             per_fold, met = _linear_cv_driver(
                 _driver_arrays(
                     base,
@@ -659,7 +642,6 @@ def logistic_cv(
     iterations: int = 3,
     ridge: float = 1e-6,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """K-fold cross-validated IRLS logistic regression — all K
     held-out models advance together, ONE grouped pass per Newton
@@ -728,14 +710,9 @@ def logistic_cv(
         n_rows = base.count()
         if n_rows == 0:
             raise ValueError("logistic_cv: no usable rows")
-        gate = (
-            GLM_DRIVER_MAX_ROWS
-            if driver_gate_rows is None
-            else int(driver_gate_rows)
-        )
-        if driver_gates_enabled() and n_rows <= gate:
+        if driver_gates_enabled() and n_rows <= DRIVER_MAX_ROWS:
             # bounded driver fast path (gate rationale at
-            # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
+            # DRIVER_MAX_ROWS); bit-identical to the passes below
             # up to the exp/log kernels (parity-tested on the benched
             # data with the gate toggled)
             met = _logistic_cv_driver(
@@ -986,7 +963,6 @@ def poisson_train(
     iterations: int = 3,
     ridge: float = 1e-6,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Poisson regression (log link) for count targets — orders per
     customer, events per session, defects per batch: train
@@ -1044,14 +1020,9 @@ def poisson_train(
         base.unpersist()
         raise ValueError("poisson_train: no usable rows")
     ridge_i = int(Decimal(repr(float(ridge))).scaleb(12).to_integral_value())
-    gate = (
-        GLM_DRIVER_MAX_ROWS
-        if driver_gate_rows is None
-        else int(driver_gate_rows)
-    )
-    if driver_gates_enabled() and n_rows <= gate:
+    if driver_gates_enabled() and n_rows <= DRIVER_MAX_ROWS:
         # bounded driver fast path (gate rationale at
-        # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below up
+        # DRIVER_MAX_ROWS); bit-identical to the passes below up
         # to the exp kernel (np.exp vs the JVM's Math.exp — both
         # correctly-rounded to ≤1 ulp; the pico grid absorbs the
         # residual band, parity-tested on the benched data)
@@ -1155,7 +1126,6 @@ def huber_train(
     iterations: int = 3,
     ridge: float = 1e-6,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Huber robust regression by IRLS — the GLM family's answer to
     contaminated labels (the reference's quality plane flags outliers;
@@ -1235,14 +1205,9 @@ def huber_train(
     if n_rows == 0:
         base.unpersist()
         raise ValueError("huber_train: no usable rows")
-    gate = (
-        GLM_DRIVER_MAX_ROWS
-        if driver_gate_rows is None
-        else int(driver_gate_rows)
-    )
-    if driver_gates_enabled() and n_rows <= gate:
+    if driver_gates_enabled() and n_rows <= DRIVER_MAX_ROWS:
         # bounded driver fast path (gate rationale at
-        # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
+        # DRIVER_MAX_ROWS); bit-identical to the passes below
         arrs = _driver_arrays(
             base, ["_y"] + [f"_x{j}" for j in range(1, d)]
         )
@@ -1324,7 +1289,6 @@ def quantile_train(
     ridge: float = 1e-6,
     eps: float = 1e-3,
     max_features: int = 8,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Quantile (pinball-loss) regression by IRLS — completes the
     in-engine GLM family across the target's SHAPE: OLS/ridge fit the
@@ -1423,14 +1387,9 @@ def quantile_train(
         n_rows = base.count()
         if n_rows == 0:
             raise ValueError("quantile_train: no usable rows")
-        gate = (
-            GLM_DRIVER_MAX_ROWS
-            if driver_gate_rows is None
-            else int(driver_gate_rows)
-        )
-        if driver_gates_enabled() and n_rows <= gate:
+        if driver_gates_enabled() and n_rows <= DRIVER_MAX_ROWS:
             # bounded driver fast path (gate rationale at
-            # GLM_DRIVER_MAX_ROWS); bit-identical to the passes below
+            # DRIVER_MAX_ROWS); bit-identical to the passes below
             arrs = _driver_arrays(
                 base, ["_y"] + [f"_x{j}" for j in range(1, d)]
             )

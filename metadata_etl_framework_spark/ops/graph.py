@@ -27,9 +27,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
 from metadata_etl_framework_spark.ops.driver_exact import (
+    DRIVER_MAX_EDGES,
+    DRIVER_MAX_ROWS,
     driver_gates_enabled,
 )
-from metadata_etl_framework_spark.ops.materialize import BCAST_MAX_ROWS
+from metadata_etl_framework_spark.ops.materialize import (
+    BCAST_MAX_ROWS,
+    materialize_iter,
+)
 
 __all__ = [
     "pagerank",
@@ -50,52 +55,6 @@ __all__ = [
     "eigenvector_centrality",
 ]
 
-# Iteration count at/above which per-round materialization switches from
-# persist()+count() to eager localCheckpoint(). persist caches DATA but
-# the logical plan still chains every prior round, so analysis/compile
-# cost grows superlinearly with iterations (a 10-iteration dangling-arm
-# pagerank plan unrolled to ~1055 exchanges); localCheckpoint truncates
-# lineage outright, keeping the plan O(1) per round — the k_core
-# discipline. Round 14 (r13 verdict task 1): truncation is now
-# UNCONDITIONAL. The old >=6 gate let short benched unrolls keep plain
-# persist, and any loop whose round references the previous frame >=2×
-# (eigenvector's contribution join + identity-add, label propagation's
-# neighbor join over the self-referencing adjacency) doubles its plan
-# per round — the 3-iteration benched eigenvector arm analyzed to 4,793
-# exchanges. The hybrid (persist+count through the SQL path so AQE still
-# plans the segment, THEN checkpoint the cached blocks) measured FASTER
-# than persist-only on the dangling A/B (3.69 s vs 6.8 s at sf0.1), so
-# there is no remaining reason to gate it on loop length.
-_TRUNCATE_MIN_ITERS = 1
-
-
-def _materialize_iter(df: DataFrame, truncate: bool) -> DataFrame:
-    """Materialize one iteration frame under the loop discipline above:
-    ``truncate=True`` → eager ``localCheckpoint`` (lineage cut, frame
-    persisted by the checkpoint itself; superseded frames are released
-    by the ContextCleaner as references drop); ``truncate=False`` →
-    ``persist``+``count`` (caller unpersists the predecessor).
-
-    Round-13 measurement note: truncation executes through ``.rdd``,
-    which compiles the segment WITHOUT AQE (no runtime SMJ→BHJ
-    conversion, no partition coalescing) — a bare localCheckpoint on
-    the full benched dangling query measured 7.5 s vs 4.6 s for the
-    persist path at sf0.1 (an earlier A/B that pre-persisted the edge
-    frame hid this). The truncate arm therefore runs the segment
-    through the SQL path FIRST (persist + count, AQE on), then
-    checkpoints — the checkpoint scan reads the cached blocks, so the
-    non-AQE penalty applies only to a cache read, and the returned
-    frame's plan is still a leaf."""
-    if truncate:
-        cached = df.persist()
-        cached.count()
-        out = cached.localCheckpoint()
-        cached.unpersist()
-        return out
-    df = df.persist()
-    df.count()
-    return df
-
 
 def pagerank(
     edges: DataFrame,
@@ -108,7 +67,6 @@ def pagerank(
     seed_nodes: "Sequence[str] | None" = None,
     redistribute_dangling: bool = False,
     tol: float | None = None,
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list.
 
@@ -191,9 +149,7 @@ def pagerank(
         return edges.sparkSession.createDataFrame(
             [], "node string, rank double"
         )
-    if driver_gate_edges is None:
-        driver_gate_edges = _MOVE_BCAST_MAX_NODES
-    if driver_gates_enabled() and n_edges <= driver_gate_edges:
+    if driver_gates_enabled() and n_edges <= DRIVER_MAX_ROWS:
         # bounded driver fast path (the Louvain move-round
         # convention): one transfer of the filtered edge rows, then
         # the iterations — per-edge double contributions, the exact
@@ -325,7 +281,6 @@ def pagerank(
     if redistribute_dangling:
         ck_tol = min(checkpoint_every, 3)
         checkpoint_every = 1
-    truncate = iterations >= _TRUNCATE_MIN_ITERS
     # node-count broadcast gate for the per-iteration joins (guide
     # §3.1, the label-propagation/eigenvector convention): the rank
     # iterate is O(nodes) — broadcasting it as the build side of the
@@ -387,7 +342,7 @@ def pagerank(
                 ).alias("rank"),
             )
         if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            new_rank = _materialize_iter(_shrink(new_rank, small), truncate)
+            new_rank = materialize_iter(_shrink(new_rank, small))
             converged = False
             at_tol = (i + 1) % ck_tol == 0 or i == iterations - 1
             if tol is not None and i < iterations - 1 and at_tol:
@@ -818,7 +773,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     checkpoint_every: int = 1,
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (community
     detection): every node starts labeled with its own id; each
@@ -847,11 +801,9 @@ def label_propagation(
         raise ValueError("iterations must be >= 1")
     und = _undirected(edges, src_col, dst_col).persist()
     n_und = und.count()
-    if driver_gate_edges is None:
-        driver_gate_edges = _MOVE_BCAST_MAX_NODES
     if (
         driver_gates_enabled()
-        and 2 * n_und <= driver_gate_edges
+        and 2 * n_und <= DRIVER_MAX_ROWS
         and isinstance(edges.schema[src_col].dataType, IntegralType)
     ):
         # bounded driver fast path (the pagerank convention): pure
@@ -880,7 +832,6 @@ def label_propagation(
     # node-count broadcast gate (the _greedy_move_rounds convention)
     small = labels.count() <= _MOVE_BCAST_MAX_NODES
     bc = F.broadcast if small else (lambda d: d)
-    truncate = iterations >= _TRUNCATE_MIN_ITERS
     for it in range(1, iterations + 1):
         counts = (
             adj.join(
@@ -905,8 +856,8 @@ def label_propagation(
             .select(F.col("v").alias("node"), F.col("m.nl").alias("label"))
         )
         if it % checkpoint_every == 0 or it == iterations:
-            new_labels = _materialize_iter(
-                _shrink(new_labels, small), truncate
+            new_labels = materialize_iter(
+                _shrink(new_labels, small)
             )
             labels.unpersist()
         labels = new_labels
@@ -1047,11 +998,11 @@ def closeness_sampled(
                 .join(visited, ["s", "node"], "left_anti")
                 .withColumn("dist", F.lit(hop).cast("int"))
             )
-            nxt = _materialize_iter(_shrink(nxt, small), truncate=True)
+            nxt = materialize_iter(_shrink(nxt, small))
             if nxt.limit(1).count() == 0:
                 break
-            visited = _materialize_iter(
-                _shrink(visited.unionByName(nxt), small), truncate=True
+            visited = materialize_iter(
+                _shrink(visited.unionByName(nxt), small)
             )
             frontier = nxt
         inv = F.when(
@@ -1096,7 +1047,6 @@ def random_walks(
     dst_col: str = "dst",
     seed: int = 1,
     max_walk_length: int = 20,
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Deterministic uniform random walks over a directed edge list —
     the sampling primitive under DeepWalk/node2vec-style embeddings
@@ -1176,9 +1126,7 @@ def random_walks(
         # carries _SMALL_GRAPH_NPART partitions per arm; above it the
         # node-scale equi-join stands — the right plan at fact scale
         small = int(mins["n"]) <= _MOVE_BCAST_MAX_NODES
-        if driver_gate_edges is None:
-            driver_gate_edges = _MOVE_BCAST_MAX_NODES
-        if driver_gates_enabled() and int(mins["n"]) <= driver_gate_edges:
+        if driver_gates_enabled() and int(mins["n"]) <= DRIVER_MAX_ROWS:
             # bounded driver fast path (the Louvain move-round
             # convention): the adjacency table the broadcast arm would
             # ship to every executor is instead collected ONCE (the
@@ -1417,7 +1365,6 @@ def walk_cooccurrence(
     walks: DataFrame,
     window: int = 2,
     max_window: int = 10,
-    driver_gate_rows: "int | None" = None,
 ) -> DataFrame:
     """Skip-gram co-occurrence + PMI over a :func:`random_walks`
     corpus — the DeepWalk recipe's counting half: nodes appearing
@@ -1443,10 +1390,10 @@ def walk_cooccurrence(
             f"self-join fans out linearly in window"
         )
     local = getattr(walks, "_graft_local_walks", None)
-    if driver_gates_enabled() and local is not None and len(local[0]) <= (
-        _MOVE_BCAST_MAX_NODES
-        if driver_gate_rows is None
-        else driver_gate_rows
+    if (
+        driver_gates_enabled()
+        and local is not None
+        and len(local[0]) <= DRIVER_MAX_ROWS
     ):
         # the corpus came from the random_walks driver arm: consume
         # its arrays directly (identical rows) instead of collecting
@@ -1469,9 +1416,7 @@ def walk_cooccurrence(
     # is map-side + one groupBy shuffle (guide §3.1); above the gate
     # the equi-shuffle self-join stands
     n_corpus = walks.count()
-    if driver_gate_rows is None:
-        driver_gate_rows = _MOVE_BCAST_MAX_NODES
-    if driver_gates_enabled() and n_corpus <= driver_gate_rows:
+    if driver_gates_enabled() and n_corpus <= DRIVER_MAX_ROWS:
         # bounded driver fast path (the random_walks convention): the
         # corpus the broadcast arm would ship whole to every executor
         # is collected once, and the band pairing + integer counting +
@@ -1600,10 +1545,7 @@ def pmi_embeddings(
     absorbs single-pico divergences cascading from the half-round
     roundings.
     """
-    from metadata_etl_framework_spark.ops.recsys import (
-        ALS_DRIVER_MAX_ROWS,
-        als_factorize,
-    )
+    from metadata_etl_framework_spark.ops.recsys import als_factorize
 
     local = getattr(pmi_pairs, "_graft_local_pmi", None)
     if (
@@ -1622,7 +1564,7 @@ def pmi_embeddings(
         ua, ub, _n, pmiv = local
         mask = pmiv > 0
         n_sym = 2 * int(mask.sum())
-        if n_sym <= ALS_DRIVER_MAX_ROWS:
+        if n_sym <= DRIVER_MAX_ROWS:
             from metadata_etl_framework_spark.ops.driver_exact import (
                 spark_round_f64,
             )
@@ -1727,7 +1669,7 @@ def hits(
             .unionByName(e.select(F.col("_v").alias("node")))
             .distinct()
         )
-        nodes = _materialize_iter(nodes, truncate=True)
+        nodes = materialize_iter(nodes)
         n = nodes.count()
         if n == 0:
             return edges.sparkSession.createDataFrame(
@@ -1768,7 +1710,7 @@ def hits(
                 .otherwise(F.lit(0.0))
                 .alias("a"),
             )
-            auth = _materialize_iter(_shrink(auth, small), truncate=True)
+            auth = materialize_iter(_shrink(auth, small))
             contrib_h = (
                 e.join(
                     auth.select(F.col("node").alias("_v"), "a"), "_v"
@@ -1796,7 +1738,7 @@ def hits(
                 .otherwise(F.lit(0.0))
                 .alias("h"),
             )
-            hub = _materialize_iter(_shrink(hub, small), truncate=True)
+            hub = materialize_iter(_shrink(hub, small))
             if tol is not None and it < int(iterations) - 1:
                 deltas = []
                 for cur, prev, col in (
@@ -1986,7 +1928,6 @@ def betweenness_sampled(
     src: str = "src",
     dst: str = "dst",
     max_hops: int = 20,
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Sampled betweenness centrality — Brandes' dependency
     accumulation (Brandes 2001) restricted to a seed set of sources,
@@ -2022,11 +1963,9 @@ def betweenness_sampled(
         )
     und = _undirected(edges, src, dst).persist()
     n_und = und.count()
-    if driver_gate_edges is None:
-        driver_gate_edges = _MOVE_BCAST_MAX_NODES
     if (
         driver_gates_enabled()
-        and 2 * n_und <= driver_gate_edges
+        and 2 * n_und <= DRIVER_MAX_ROWS
         and isinstance(edges.schema[src].dataType, IntegralType)
     ):
         # bounded driver fast path (the pagerank convention): collect
@@ -2076,11 +2015,11 @@ def betweenness_sampled(
                 .withColumn("dist", F.lit(hop).cast("int"))
                 .select("s", "node", "dist", "sigma")
             )
-            nxt = _materialize_iter(_shrink(nxt, small), truncate=True)
+            nxt = materialize_iter(_shrink(nxt, small))
             if nxt.limit(1).count() == 0:
                 break
-            visited = _materialize_iter(
-                _shrink(visited.unionByName(nxt), small), truncate=True
+            visited = materialize_iter(
+                _shrink(visited.unionByName(nxt), small)
             )
             frontier = nxt
         h_max = visited.agg(F.max("dist")).collect()[0][0] or 0
@@ -2137,7 +2076,7 @@ def betweenness_sampled(
                     ),
                 )
             )
-            cur = _materialize_iter(_shrink(nxt_cur, small), truncate=True)
+            cur = materialize_iter(_shrink(nxt_cur, small))
             deps.append(
                 cur.where(
                     (F.col("node") != F.col("s"))
@@ -2518,7 +2457,6 @@ def greedy_modularity_move(
     labels: "DataFrame | None" = None,
     node_col: str = "node",
     label_col: str = "community",
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Deterministic Louvain-style local-move rounds — the OPTIMIZER
     for the metric :func:`modularity` scores: each round, eligible
@@ -2569,7 +2507,7 @@ def greedy_modularity_move(
     community-degree aggregate joined back, one groupBy(v) argmin —
     row-scale equi-shuffles only; m enters once as a driver literal
     from a 1-row count. Label frames follow the
-    :func:`_materialize_iter` truncation discipline.
+    :func:`materialize_iter` truncation discipline.
 
     ``labels``: optional starting assignment (node, community);
     default = singleton communities (each node its own id).
@@ -2587,19 +2525,16 @@ def greedy_modularity_move(
         und.unpersist()
         raise ValueError("greedy_modularity_move: no edges")
     node_type = und.schema["a"].dataType
-    if driver_gate_edges is None:
-        # defined below (module layout); resolved at call time
-        driver_gate_edges = _DRIVER_MOVE_MAX_EDGES
     if (
         driver_gates_enabled()
-        and m <= driver_gate_edges
+        and m <= DRIVER_MAX_EDGES
         and (
             labels is None
             or labels.schema[label_col].dataType == node_type
         )
     ):
-        # bounded driver fast path (gate rationale at
-        # _DRIVER_MOVE_MAX_EDGES): collect the canonical edge list and
+        # bounded driver fast path (gate rationale in
+        # ops/driver_exact.py): collect the canonical edge list and
         # run the move rounds in pure-int Python — bit-identical to
         # _greedy_move_rounds by construction. Distributed arm
         # unchanged above the gate (or when a supplied label frame
@@ -2643,9 +2578,8 @@ def greedy_modularity_move(
         .withColumn("_w", F.lit(1).cast("long"))
         .persist()
     )
-    deg = _materialize_iter(
-        adj.groupBy("v").agg(F.sum("_w").alias("_d")),
-        truncate=True,
+    deg = materialize_iter(
+        adj.groupBy("v").agg(F.sum("_w").alias("_d"))
     )
     und.unpersist()
     if labels is None:
@@ -2691,7 +2625,7 @@ def greedy_modularity_move(
                 ),
             )
         )
-        lab = _materialize_iter(lab, truncate=True)
+        lab = materialize_iter(lab)
     lab = _greedy_move_rounds(adj, deg, m, lab, rounds)
     adj.unpersist()
     deg.unpersist()
@@ -2728,20 +2662,6 @@ def _shrink(df: DataFrame, small: bool) -> DataFrame:
     narrow merge of reduce partitions — no extra shuffle); identity
     above the gate."""
     return df.coalesce(_SMALL_GRAPH_NPART) if small else df
-
-
-# Edge gate for the DRIVER-side move-round fast path (the
-# connected_components union-find convention, ops/dedup.py): a canonical
-# undirected edge list at or under this many rows transfers via Arrow in
-# one bounded toPandas (~16 B/edge numeric) and the alternating-direction
-# argmax loop — pure integer arithmetic, bit-identical to the
-# distributed rounds by construction — runs in milliseconds per round on
-# the driver, skipping ~6 scheduled jobs per round (measured at sf0.1 /
-# local[32]: the benched two-level Louvain spent >10 s on job scheduling
-# over a 6.7k-node graph; the driver arm computes the same labels in
-# ~1 s). Above the gate the fully-distributed rounds are unchanged — the
-# right plan at 100-TB edge counts.
-_DRIVER_MOVE_MAX_EDGES = 500_000
 
 
 def _move_rounds_py(
@@ -2945,7 +2865,7 @@ def _greedy_move_rounds(
         )
         prev = lab
         # fused materialize: the move-count aggregate scans every
-        # partition, populating the persist (the job _materialize_iter
+        # partition, populating the persist (the job materialize_iter
         # would otherwise spend on count()), then the checkpoint reads
         # the cached blocks — 2 jobs per round, not 3
         cached = _shrink(new_lab, small).persist()
@@ -3038,7 +2958,6 @@ def louvain_two_level(
     rounds: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    driver_gate_edges: int = _DRIVER_MOVE_MAX_EDGES,
 ) -> DataFrame:
     """Two-level Louvain community detection — the full method's
     shape in fixed, oracle-replayable form: ``rounds`` alternating
@@ -3095,9 +3014,9 @@ def louvain_two_level(
     if m == 0:
         und.unpersist()
         raise ValueError("louvain_two_level: no edges")
-    if driver_gates_enabled() and m <= driver_gate_edges:
-        # bounded driver fast path (gate rationale at
-        # _DRIVER_MOVE_MAX_EDGES): one collect of the canonical edge
+    if driver_gates_enabled() and m <= DRIVER_MAX_EDGES:
+        # bounded driver fast path (gate rationale in
+        # ops/driver_exact.py): one collect of the canonical edge
         # list, both phases + contraction + acceptance in pure-int
         # Python — bit-identical to the distributed rounds below by
         # construction (same scores, tie-breaks, direction rule,
@@ -3120,9 +3039,8 @@ def louvain_two_level(
         )
         .persist()
     )
-    deg = _materialize_iter(
-        _shrink(adj.groupBy("v").agg(F.sum("_w").alias("_d")), small),
-        truncate=True,
+    deg = materialize_iter(
+        _shrink(adj.groupBy("v").agg(F.sum("_w").alias("_d")), small)
     )
     # the singleton start labels are a projection of the checkpointed
     # deg leaf — already materialized, no extra checkpoint needed
@@ -3200,7 +3118,7 @@ def louvain_two_level(
     # from phase 1 (one count job saved; e2 materializes its persist
     # on first use by the contraction aggregates below)
     # strength = inter weight + 2 × self-loop weight (Newman)
-    deg2 = _materialize_iter(
+    deg2 = materialize_iter(
         _shrink(
             adj2.select("v", "_w")
             .unionByName(
@@ -3212,8 +3130,7 @@ def louvain_two_level(
             .groupBy("v")
             .agg(F.sum("_w").alias("_d")),
             small,
-        ),
-        truncate=True,
+        )
     )
     lab2 = _greedy_move_rounds(
         adj2,
@@ -3224,7 +3141,7 @@ def louvain_two_level(
         ),
         rounds,
     )
-    two_lvl = _materialize_iter(
+    two_lvl = materialize_iter(
         _shrink(
             l1.join(
                 bc(
@@ -3236,8 +3153,7 @@ def louvain_two_level(
                 "community",
             ).select("node", F.col("_super").alias("community")),
             small,
-        ),
-        truncate=True,
+        )
     )
 
     # acceptance test (docstring): exact integer Q·4m² per partition.
@@ -3387,7 +3303,6 @@ def eigenvector_centrality(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: "str | None" = None,
-    driver_gate_edges: "int | None" = None,
 ) -> DataFrame:
     """Eigenvector centrality by power iteration — completes the
     centrality family (PageRank's damped/teleport variant, HITS'
@@ -3434,9 +3349,7 @@ def eigenvector_centrality(
         w.alias("_w"),
     ).persist()
     n_edges = e.count()
-    if driver_gate_edges is None:
-        driver_gate_edges = _MOVE_BCAST_MAX_NODES
-    if driver_gates_enabled() and n_edges <= driver_gate_edges:
+    if driver_gates_enabled() and n_edges <= DRIVER_MAX_ROWS:
         # bounded driver fast path (the pagerank convention): one
         # transfer of the filtered edge rows, then the shifted power
         # iterations — decimal(28,12) contribution fixed point, the
@@ -3469,10 +3382,8 @@ def eigenvector_centrality(
     # references the score frame twice: contribution join + identity
     # add) — truncate lineage at every materialization; the benched
     # 3-iteration arm analyzed to 4,793 exchanges under plain persist
-    truncate = int(iterations) >= _TRUNCATE_MIN_ITERS
-    x = _materialize_iter(
-        _shrink(nodes.select("node", F.lit(1.0).alias("x")), small),
-        truncate,
+    x = materialize_iter(
+        _shrink(nodes.select("node", F.lit(1.0).alias("x")), small)
     )
     prev_y = None
     try:
@@ -3488,7 +3399,7 @@ def eigenvector_centrality(
                     ).cast("double").alias("y")
                 )
             )
-            y = _materialize_iter(
+            y = materialize_iter(
                 _shrink(
                     x.join(bc(contrib), "node", "left").select(
                         "node",
@@ -3498,8 +3409,7 @@ def eigenvector_centrality(
                         ).alias("y"),
                     ),
                     small,
-                ),
-                truncate,
+                )
             )
             s = y.agg(
                 F.sum(

@@ -1,26 +1,13 @@
-"""Shared eager-materialization helper — the AQE-keeping lineage cut.
-
-A bare ``df.localCheckpoint(eager=True)`` executes the segment through
-``.rdd``, which compiles WITHOUT adaptive query execution: no runtime
-SMJ→BHJ conversion, no partition coalescing, no skew splitting. The
-round-13 measurement on the benched dangling-PageRank arm put the
-penalty at ~1.6× (7.5 s vs 4.6 s at sf0.1). The hybrid below runs the
-segment through the SQL path FIRST (persist + count, AQE on), then
-checkpoints the cached blocks — the non-AQE compile applies only to a
-cache read, and the returned frame's plan is a leaf.
-
-This is the same discipline as ``ops/graph.py::_materialize_iter``
-(which additionally offers the persist-only arm for linear loops);
-this module exists so every op that just needs "materialize + cut
-lineage at the end" shares one audited implementation instead of a
-bare checkpoint.
+"""Shared eager-materialization helper — the AQE-keeping lineage cut
+(:func:`materialize_iter`) every iterative op uses instead of a bare
+checkpoint, plus the shared broadcast-join row gate.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-__all__ = ["checkpoint_hybrid", "BCAST_MAX_ROWS"]
+__all__ = ["materialize_iter", "BCAST_MAX_ROWS"]
 
 # Measured broadcast gate shared by the iterative-join call sites
 # (graph move rounds / pagerank / eigenvector / label propagation and
@@ -32,12 +19,26 @@ __all__ = ["checkpoint_hybrid", "BCAST_MAX_ROWS"]
 BCAST_MAX_ROWS = 2_000_000
 
 
-def checkpoint_hybrid(df: DataFrame) -> DataFrame:
-    """Eagerly materialize ``df`` and cut its lineage, keeping AQE on
-    the computing segment (see module docstring). The returned frame
-    is the checkpoint leaf itself; its blocks are RDD-level (not
-    cache-manager entries), so ``Dataset.unpersist()`` cannot release
-    them — the ContextCleaner frees them as references drop."""
+def materialize_iter(df: DataFrame) -> DataFrame:
+    """Eagerly materialize one iteration frame and cut its lineage.
+
+    ``persist`` alone caches data but leaves the logical plan chaining
+    every prior round; any loop whose round references the previous
+    frame twice (eigenvector's contribution join + identity add, the
+    dangling-PageRank mass aggregate) doubles its plan per round — the
+    3-iteration eigenvector arm analyzed to 4,793 exchanges. A bare
+    ``localCheckpoint`` truncates, but executes through ``.rdd``, which
+    compiles WITHOUT AQE (no runtime SMJ→BHJ conversion, no partition
+    coalescing): 7.5 s vs 4.6 s for persist on the dangling-PageRank
+    arm at sf0.1. So the segment runs through the SQL path first
+    (persist + count, AQE on), then the cached blocks are checkpointed:
+    the non-AQE compile applies only to a cache read, and the returned
+    frame's plan is a leaf.
+
+    The returned frame is the checkpoint itself; its blocks are
+    RDD-level (not cache-manager entries), so ``Dataset.unpersist()``
+    cannot release them — the ContextCleaner frees superseded frames as
+    references drop."""
     cached = df.persist()
     cached.count()
     out = cached.localCheckpoint()

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from metadata_etl_framework_spark.ops.driver_exact import (
+    DRIVER_MAX_ROWS,
     driver_gates_enabled,
 )
 from metadata_etl_framework_spark.ops.materialize import BCAST_MAX_ROWS
@@ -56,15 +57,14 @@ __all__ = [
 
 _DEC = "decimal(30,10)"
 
-# Driver gates for the CF fast paths: at or under these bounds the
-# deduped interaction frame (and the pair-bounded neighbor model)
-# transfer in one Arrow collect each and the candidate generation /
-# scoring runs on exact vectorized twins — integer co-occurrence
-# counts, correctly-rounded sqrt, 6-dp rounds and exact micro-int
-# score sums, so the twins are bit-exact by construction (no
+# Driver gates for the CF fast paths: at or under DRIVER_MAX_ROWS and
+# these bounds the deduped interaction frame (and the pair-bounded
+# neighbor model) transfer in one Arrow collect each and the candidate
+# generation / scoring runs on exact vectorized twins — integer
+# co-occurrence counts, correctly-rounded sqrt, 6-dp rounds and exact
+# micro-int score sums, so the twins are bit-exact by construction (no
 # transcendental kernels). Above any bound the distributed chains are
 # unchanged — the right plan at catalog scale.
-CF_DRIVER_MAX_ROWS = 2_000_000
 CF_DRIVER_MAX_PAIRS = 20_000_000
 CF_DRIVER_MAX_ITEMS = 4_096
 
@@ -257,11 +257,11 @@ def item_item_cosine(
         and driver_gates_enabled()
     ):
         # bounded driver fast path (gate rationale at
-        # CF_DRIVER_MAX_ROWS); oversized catalogs, pair blowups or
+        # CF_DRIVER_MAX_PAIRS); oversized catalogs, pair blowups or
         # non-orderable key values fall through to the distributed
         # chain below
         n_inter = inter.count()
-        if n_inter <= CF_DRIVER_MAX_ROWS:
+        if n_inter <= DRIVER_MAX_ROWS:
             import numpy as np
 
             tbl = inter.select("_u", "_i").toArrow()
@@ -396,10 +396,10 @@ def _recommend_driver(
     # irrelevant: the twin indexes by (item_a, item_b).
     stbl = (
         sims.select("item_a", "item_b", "shrunk_cosine")
-        .limit(CF_DRIVER_MAX_ROWS + 1)
+        .limit(DRIVER_MAX_ROWS + 1)
         .toArrow()
     )
-    if stbl.num_rows > CF_DRIVER_MAX_ROWS:
+    if stbl.num_rows > DRIVER_MAX_ROWS:
         return None
     A = stbl.column("item_a").to_numpy(zero_copy_only=False)
     B = stbl.column("item_b").to_numpy(zero_copy_only=False)
@@ -539,9 +539,9 @@ def recommend_items(
     # released after the eager O(users·top_n) output leaf below
     seen = seen.persist()
     n_seen = seen.count()
-    if driver_gates_enabled() and n_seen <= CF_DRIVER_MAX_ROWS:
+    if driver_gates_enabled() and n_seen <= DRIVER_MAX_ROWS:
         # bounded driver fast path (gate rationale at
-        # CF_DRIVER_MAX_ROWS): the model is pair-bounded and seen is
+        # CF_DRIVER_MAX_PAIRS): the model is pair-bounded and seen is
         # under the gate, so scoring runs on the exact integer twin;
         # any unmet precondition falls through to the distributed
         # chain (seen stays persisted either way)
@@ -579,11 +579,11 @@ def recommend_items(
     # a cheap scan of the checkpointed blocks, and 2×|pairs| is the
     # exact symmetrized row count the executors would have to hold.
     # Above the gate, pin the SORT-MERGE form explicitly: the
-    # checkpointed leaf carries real size statistics (checkpoint_hybrid
-    # materializes through the cache), and a planner estimate must not
-    # be allowed to override the caller's measured ceiling with an
-    # auto-broadcast — the whole point of the gate is that broadcast
-    # size is governed by the count, not an estimate.
+    # checkpointed leaf carries real size statistics (the hybrid
+    # checkpoint materializes through the cache), and a planner
+    # estimate must not be allowed to override the caller's measured
+    # ceiling with an auto-broadcast — the whole point of the gate is
+    # that broadcast size is governed by the count, not an estimate.
     if 2 * sims.count() <= int(broadcast_max_rows):
         sym = F.broadcast(sym)
     else:
@@ -769,19 +769,6 @@ def _als_driver_core(
     return uu, pf1, pf2, itu, qf1, qf2
 
 
-# Driver gate for the ALS fast path: a ratings table at or under this
-# many rows transfers in one bounded Arrow collect (three numeric
-# columns — ≤ ~48 MB at the gate, columnar batches rather than pickled
-# Rows) and the four half-rounds run vectorized on the driver in well
-# under a second, versus ~5-7 s of broadcast-build + shuffle jobs for
-# the distributed halves at the benched scale. Same 2M-row measured
-# gate as the GLM trainers (GLM_DRIVER_MAX_ROWS) and BCAST_MAX_ROWS —
-# the transfer is O(ratings) of three numerics, the same byte budget
-# as the GLM projection at its gate. Above it the distributed
-# half-rounds are unchanged — the right plan at fact scale.
-ALS_DRIVER_MAX_ROWS = 2_000_000
-
-
 def als_factorize(
     df: DataFrame,
     user_col: str,
@@ -789,7 +776,6 @@ def als_factorize(
     rating_col: str,
     rounds: int = 2,
     reg: float = 0.1,
-    driver_gate_rows: "int | None" = None,
 ) -> "tuple[DataFrame, DataFrame]":
     """ALS matrix factorization at rank 2 — implicit/explicit-feedback
     factors beyond the item-item CF above (the reference's analytics
@@ -816,7 +802,7 @@ def als_factorize(
     cut is ONE eager localCheckpoint over the tagged union of the two
     final factor frames — an interleaved min-of-3 A/B at sf0.1
     measured 3.96 s for this shape vs 5.4–6.4 s for the former
-    per-half checkpoint_hybrid (five persist+count+checkpoint cycles:
+    per-half hybrid checkpoint (five persist+count+checkpoint cycles:
     the checkpoint copies dominated on O(keys) frames). The returned
     frames are narrow reads of that one leaf, so no cache entries
     outlive the call. λ > 0 keeps every 2×2 system non-singular (cold
@@ -842,20 +828,18 @@ def als_factorize(
     base = base.persist()
     n_ratings = base.count()
 
-    if driver_gate_rows is None:
-        driver_gate_rows = ALS_DRIVER_MAX_ROWS
     from pyspark.sql.types import IntegralType
 
     u_type = df.schema[user_col].dataType
     it_type = df.schema[item_col].dataType
     if (
         driver_gates_enabled()
-        and n_ratings <= driver_gate_rows
+        and n_ratings <= DRIVER_MAX_ROWS
         and isinstance(u_type, IntegralType)
         and isinstance(it_type, IntegralType)
     ):
         # bounded driver fast path (gate rationale at
-        # ALS_DRIVER_MAX_ROWS); non-integral key columns stay on the
+        # DRIVER_MAX_ROWS); non-integral key columns stay on the
         # distributed arm (the portable-hash init is defined on
         # integer keys and the replica's arrays are int64). ONE Arrow
         # transfer of the three numeric columns — columnar batches,
@@ -890,7 +874,7 @@ def als_factorize(
     # checkpoint): the next half's broadcast build populates the cache
     # on demand, so each half still executes exactly once, without the
     # per-half count job and checkpoint copy of the former
-    # checkpoint_hybrid form (measured: see docstring). Handles are
+    # cache-then-checkpoint form (measured: see docstring). Handles are
     # released after the single end-of-op leaf below.
     _handles: list[DataFrame] = []
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_etl_framework_spark.ops.driver_exact import (
+    DRIVER_MAX_ROWS,
     driver_gates_enabled,
 )
 
@@ -847,21 +848,19 @@ def rfm_segments(
     # passes with the cache-then-checkpoint hybrid; the frame is
     # CUSTOMER-level (tiny relative to facts), so the materializations
     # are O(users) each and the audited plan stays one-pass-sized
-    from metadata_etl_framework_spark.ops.graph import _materialize_iter
+    from metadata_etl_framework_spark.ops.materialize import materialize_iter
 
     # superseded checkpoint blocks are released by the ContextCleaner
     # as the Python references drop at each rebind below —
     # Dataset.unpersist() cannot reach localCheckpoint blocks (they are
     # RDD-level, not cache-manager entries), so there is no eager-release
     # lever here; the frames are O(users) each, bounded between calls
-    scored = _materialize_iter(scored, truncate=True)
-    scored = _materialize_iter(
+    scored = materialize_iter(scored)
+    scored = materialize_iter(
         ntile_assign(scored, ["recency_days", "user"], n_buckets, out="_rb"),
-        truncate=True,
     )
-    scored = _materialize_iter(
+    scored = materialize_iter(
         ntile_assign(scored, ["frequency", "user"], n_buckets, out="f_score"),
-        truncate=True,
     )
     scored = ntile_assign(
         scored, ["monetary", "user"], n_buckets, out="m_score"
@@ -1430,12 +1429,8 @@ def cox_ph(
         def _pico(e):
             return F.round(e * F.lit(1e12)).cast("decimal(38,0)")
 
-        from metadata_etl_framework_spark.ops.glm import (
-            GLM_DRIVER_MAX_ROWS,
-        )
-
         arrs = None
-        if driver_gates_enabled() and n_subj <= GLM_DRIVER_MAX_ROWS:
+        if driver_gates_enabled() and n_subj <= DRIVER_MAX_ROWS:
             # bounded driver fast path (the GLM trainer convention):
             # ONE Arrow transfer of the three subject columns; each
             # Newton pass then runs on the exact vectorized twin
@@ -1708,12 +1703,8 @@ def cox_ph_multi(
         def _pico(e):
             return F.round(e * F.lit(1e12)).cast("decimal(38,0)")
 
-        from metadata_etl_framework_spark.ops.glm import (
-            GLM_DRIVER_MAX_ROWS,
-        )
-
         arrs = None
-        if driver_gates_enabled() and n_subj <= GLM_DRIVER_MAX_ROWS:
+        if driver_gates_enabled() and n_subj <= DRIVER_MAX_ROWS:
             # bounded driver fast path (see cox_ph): one Arrow
             # transfer; per-pass magnitude bound re-checked, with the
             # distributed form below as the bit-identical fallback

@@ -1767,16 +1767,15 @@ def _lof_from_nn(
     return out
 
 
-# Driver gate for the bucketed-LOF fast path: at or under these bounds
-# the (id, vector) frame transfers in ONE Arrow collect and the whole
-# bucket → candidate-pair → top-k → LOF derivation runs on exact
-# vectorized twins of the DECIMAL conventions (driver_exact.py) — no
+# Driver gate for the bucketed-LOF fast path: at or under DRIVER_MAX_ROWS
+# and these bounds the (id, vector) frame transfers in ONE Arrow collect
+# and the whole bucket → candidate-pair → top-k → LOF derivation runs on
+# exact vectorized twins of the DECIMAL conventions (driver_exact.py) — no
 # transcendental kernels beyond the correctly-rounded sqrt, so the twin
 # is bit-exact by construction. Above any bound the distributed chain
 # below is unchanged — the right plan at corpus scale. The benched
 # shape (2k × 64-dim vectors) spent ~6 s on 6 tiny shuffle stages of
 # interpreted per-element DECIMAL aggregates.
-LOF_DRIVER_MAX_ROWS = 2_000_000
 LOF_DRIVER_MAX_CELLS = 32_000_000  # rows × dims transferred
 LOF_DRIVER_MAX_PAIRS = 20_000_000  # Σ|bucket|² candidate pairs
 
@@ -2018,19 +2017,20 @@ def lof_scores_bucketed(
     from pyspark.sql.types import IntegralType
 
     from metadata_etl_framework_spark.ops.driver_exact import (
+        DRIVER_MAX_ROWS,
         driver_gates_enabled,
     )
 
     # row cap from BOTH gate dimensions (rows and rows×dim cells) so
     # the limit probe below bounds the transfer under either
     _lof_cap = min(
-        LOF_DRIVER_MAX_ROWS, LOF_DRIVER_MAX_CELLS // max(dim, 1)
+        DRIVER_MAX_ROWS, LOF_DRIVER_MAX_CELLS // max(dim, 1)
     )
     if driver_gates_enabled() and isinstance(
         df.schema[id_col].dataType, IntegralType
     ):
         # bounded driver fast path (gate rationale at
-        # LOF_DRIVER_MAX_ROWS); ragged vectors, duplicate ids or
+        # LOF_DRIVER_MAX_CELLS); ragged vectors, duplicate ids or
         # out-of-bound magnitudes fall through to the distributed
         # chain, as does a Σ|bucket|² above the pair cap. The gate
         # probe IS the transfer: limit(cap+1) collects at most cap+1

@@ -587,15 +587,12 @@ def spearman_corr(
     _scan_cached: "list[DataFrame]" = []
     try:
         n = base.count()
-        from metadata_etl_framework_spark.ops.glm import (
-            GLM_DRIVER_MAX_ROWS,
-        )
-
         from metadata_etl_framework_spark.ops.driver_exact import (
+            DRIVER_MAX_ROWS,
             driver_gates_enabled,
         )
 
-        if driver_gates_enabled() and 0 < n <= GLM_DRIVER_MAX_ROWS:
+        if driver_gates_enabled() and 0 < n <= DRIVER_MAX_ROWS:
             # bounded driver fast path (the GLM trainer convention):
             # ONE Arrow transfer of the two double columns, then the
             # tie-averaged doubled ranks and the five moment sums run

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from unittest import mock
 
 import pytest
 
@@ -19,6 +21,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture()
+def gate_off():
+    """``with gate_off():`` runs its body with every driver-twin gate
+    off, so the distributed arms execute — the one way tests force them
+    (ops/driver_exact.py::driver_gates_enabled)."""
+    from metadata_etl_framework_spark.ops.driver_exact import (
+        driver_gates_enabled,
+    )
+
+    @contextmanager
+    def off():
+        with mock.patch.dict(os.environ, {"SPARK_GRAFT_DRIVER_GATE": "0"}):
+            assert not driver_gates_enabled()
+            yield
+
+    return off
 
 
 def pytest_configure(config):

@@ -931,9 +931,9 @@ def test_ab_test_proportions_closed_form(spark):
         )
 
 
-def test_bpe_train_gate_paths_identical(spark):
+def test_bpe_train_gate_paths_identical(spark, gate_off):
     """Round-7: the driver-local finish gate must yield merge-for-merge
-    the same output as the fully distributed loop (gate forced to 0),
+    the same output as the fully distributed loop (gates off),
     including the early stop and tie-breaks."""
     from metadata_etl_framework_spark.ops.text import bpe_train
 
@@ -950,21 +950,20 @@ def test_bpe_train_gate_paths_identical(spark):
         tuple(r)
         for r in bpe_train(docs, n_merges=8).orderBy("merge_idx").collect()
     ]
-    dist = [
-        tuple(r)
-        for r in bpe_train(docs, n_merges=8, driver_gate_words=0)
-        .orderBy("merge_idx")
-        .collect()
-    ]
+    with gate_off():
+        dist = [
+            tuple(r)
+            for r in bpe_train(docs, n_merges=8)
+            .orderBy("merge_idx")
+            .collect()
+        ]
     assert local == dist and len(local) == 8
     # early stop agrees too (huge min_pair_count -> 0 merges both paths)
     assert bpe_train(docs, n_merges=3, min_pair_count=10**6).count() == 0
-    assert (
-        bpe_train(
-            docs, n_merges=3, min_pair_count=10**6, driver_gate_words=0
-        ).count()
-        == 0
-    )
+    with gate_off():
+        assert (
+            bpe_train(docs, n_merges=3, min_pair_count=10**6).count() == 0
+        )
 
 
 @pytest.mark.nightly

@@ -15,12 +15,16 @@
 4. ``_recommend_driver`` falls back to the distributed chain for a
    model holding BOTH (a,b) and (b,a) rows (ADVICE: dense assignment
    overwrites where the distributed symmetrize-union sums).
+5. The ``connected_components`` union-find and the ``bpe_train``
+   driver-local finish obey the same switch (they once gated on their
+   own size knobs only, so the gate-off bench arm still ran them).
 """
 
 from __future__ import annotations
 
+from unittest import mock
+
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from metadata_etl_framework_spark.ops.driver_exact import (
@@ -29,13 +33,6 @@ from metadata_etl_framework_spark.ops.driver_exact import (
     round_half_up_int64,
 )
 from metadata_etl_framework_spark.ops.retention import _cox_np_safe
-
-
-@pytest.fixture()
-def gate_off(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_GATE", "0")
-    assert not driver_gates_enabled()
-    yield
 
 
 def test_env_default_is_on(monkeypatch):
@@ -100,8 +97,6 @@ def _toy_edges(spark):
 def test_gate_env_forces_distributed_identical(spark, gate_off):
     """pagerank + robust_moments + logistic_train with the env gate
     OFF must match the twin (gate ON) bit-for-bit."""
-    import os
-
     from metadata_etl_framework_spark.functions.aggregations import (
         robust_moments,
     )
@@ -121,21 +116,16 @@ def test_gate_env_forces_distributed_identical(spark, gate_off):
         lg = logistic_train(df, ["x1", "x2"], "y", iterations=2).collect()
         return pr, rm, lg
 
-    off = run_all()
-    os.environ["SPARK_GRAFT_DRIVER_GATE"] = "1"
-    try:
-        on = run_all()
-    finally:
-        os.environ["SPARK_GRAFT_DRIVER_GATE"] = "0"
+    on = run_all()
+    with gate_off():
+        off = run_all()
     assert off == on
 
 
-def test_recommend_driver_rejects_bidirectional_model(spark):
+def test_recommend_driver_rejects_bidirectional_model(spark, gate_off):
     """A sims model carrying BOTH (a,b) and (b,a) must score through
     the distributed chain (which SUMS both rows), and the driver arm
     must agree — i.e. the gate-on and gate-off results match."""
-    import os
-
     from metadata_etl_framework_spark.ops.recsys import recommend_items
 
     inter = spark.createDataFrame(
@@ -147,11 +137,51 @@ def test_recommend_driver_rejects_bidirectional_model(spark):
         "item_a long, item_b long, shrunk_cosine double",
     )
     on = recommend_items(inter, sims, "user", "item", top_n=3).collect()
-    os.environ["SPARK_GRAFT_DRIVER_GATE"] = "0"
-    try:
+    with gate_off():
         off = recommend_items(
             inter, sims, "user", "item", top_n=3
         ).collect()
-    finally:
-        os.environ.pop("SPARK_GRAFT_DRIVER_GATE", None)
     assert on == off
+
+
+def test_cc_and_bpe_driver_finishes_obey_gate_switch(spark, gate_off):
+    """With the gates off, neither the ``connected_components``
+    union-find collect nor ``_bpe_train_local`` may run, and both
+    outputs equal the gate-on run."""
+    from metadata_etl_framework_spark.ops import text
+    from metadata_etl_framework_spark.ops.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(4, 3), (3, 2), (2, 1), (10, 11), (20, 21), (20, 22)],
+        "id_a long, id_b long",
+    )
+    docs = spark.createDataFrame(
+        [(0, "low lower lowest low"), (1, "new newer newest low")],
+        "doc_id long, text string",
+    )
+
+    def run():
+        frame_cls = type(pairs)
+        with mock.patch.object(
+            frame_cls,
+            "toPandas",
+            autospec=True,
+            side_effect=frame_cls.toPandas,
+        ) as uf_collect, mock.patch.object(
+            text, "_bpe_train_local", wraps=text._bpe_train_local
+        ) as bpe_local:
+            cc = sorted(map(tuple, connected_components(pairs).collect()))
+            bpe = [
+                tuple(r)
+                for r in text.bpe_train(docs, n_merges=4)
+                .orderBy("merge_idx")
+                .collect()
+            ]
+        return (cc, bpe), uf_collect.call_count, bpe_local.call_count
+
+    on, uf_on, bpe_on = run()
+    assert (uf_on, bpe_on) == (1, 1)  # the spies see the driver arms
+    with gate_off():
+        off, uf_off, bpe_off = run()
+    assert (uf_off, bpe_off) == (0, 0)
+    assert off == on

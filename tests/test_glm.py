@@ -527,8 +527,8 @@ def _frames_equal_exact(a, b):
     )
 
 
-def test_driver_gate_parity_all_trainers(spark):
-    """The bounded driver fast path (n_rows <= GLM_DRIVER_MAX_ROWS,
+def test_driver_gate_parity_all_trainers(spark, gate_off):
+    """The bounded driver fast path (n_rows <= DRIVER_MAX_ROWS,
     one Arrow collect + vectorized IRLS) must reproduce the
     distributed passes BIT-FOR-BIT — same fixture, gate on vs forced
     off, exact frame equality. Exercises the exp/log kernels
@@ -557,27 +557,21 @@ def test_driver_gate_parity_all_trainers(spark):
         rows, "rid long, x1 double, x2 double, yb double, yc double, yk double"
     )
     cases = [
-        lambda g: logistic_train(
-            df, ["x1", "x2"], "yb", iterations=3, driver_gate_rows=g
+        lambda: logistic_train(df, ["x1", "x2"], "yb", iterations=3),
+        lambda: poisson_train(df, ["x1", "x2"], "yk", iterations=3),
+        lambda: huber_train(
+            df, ["x1", "x2"], "yc", delta=1.0, iterations=2
         ),
-        lambda g: poisson_train(
-            df, ["x1", "x2"], "yk", iterations=3, driver_gate_rows=g
+        lambda: quantile_train(
+            df, ["x1"], "yc", taus=(0.25, 0.5, 0.9), iterations=2
         ),
-        lambda g: huber_train(
-            df, ["x1", "x2"], "yc", delta=1.0, iterations=2,
-            driver_gate_rows=g,
-        ),
-        lambda g: quantile_train(
-            df, ["x1"], "yc", taus=(0.25, 0.5, 0.9), iterations=2,
-            driver_gate_rows=g,
-        ),
-        lambda g: linear_cv(
-            df, ["x1", "x2"], "yc", "rid", n_folds=4, driver_gate_rows=g
-        ),
-        lambda g: logistic_cv(
-            df, ["x1", "x2"], "yb", "rid", n_folds=4, iterations=3,
-            driver_gate_rows=g,
+        lambda: linear_cv(df, ["x1", "x2"], "yc", "rid", n_folds=4),
+        lambda: logistic_cv(
+            df, ["x1", "x2"], "yb", "rid", n_folds=4, iterations=3
         ),
     ]
     for make in cases:
-        _frames_equal_exact(make(None), make(0))
+        on = make()
+        with gate_off():
+            off = make()
+        _frames_equal_exact(on, off)

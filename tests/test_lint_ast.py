@@ -128,10 +128,6 @@ RETURNED_LAZY_PERSISTS = {
     ("ops/dedup.py", "_shingle_base"),
     ("ops/dedup.py", "minhash_near_duplicates"),
     ("ops/dedup.py", "bloom_incremental_dedup"),
-    # loop-materialization helper: persist/release ownership sits in the
-    # calling loop (pagerank/label_propagation), localCheckpoint arm has
-    # no release API (ContextCleaner)
-    ("ops/graph.py", "_materialize_iter"),
     # offsets-correctness cache (see packing.py docstring): released by
     # the ContextCleaner when the returned frame is dropped
     ("ops/packing.py", "global_row_number"),
@@ -193,3 +189,24 @@ def test_no_persist_without_paired_release():
         "convention) and not whitelisted as returned-lazy:\n  "
         + "\n  ".join(violations)
     )
+
+
+def test_driver_gate_has_one_switch():
+    """The twin-vs-distributed venue has one owner,
+    ops/driver_exact.py: no package function takes a per-call
+    ``driver_gate*`` knob, and only that module reads the env switch
+    (every gate goes through ``driver_gates_enabled()``)."""
+    knobs, readers = [], []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        src = path.read_text()
+        if "SPARK_GRAFT_DRIVER_GATE" in src and rel != "ops/driver_exact.py":
+            readers.append(rel)
+        for node in ast.walk(ast.parse(src, filename=str(path))):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                    if arg.arg.startswith("driver_gate"):
+                        knobs.append(f"{rel}:{node.lineno} {node.name}")
+    assert not knobs, "per-call driver_gate* parameters: " + ", ".join(knobs)
+    assert not readers, f"env switch read outside driver_exact: {readers}"

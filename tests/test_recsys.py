@@ -275,7 +275,7 @@ def test_recsys_eval_coverage_hand_math(spark):
     assert r3["n_unscored"] == 1 and r3["novelty_bits"] is None
 
 
-def test_cf_driver_gate_parity(spark):
+def test_cf_driver_gate_parity(spark, gate_off):
     """The Arrow-collect driver twins of item_item_cosine (binary
     mode, incl. the top-k prune) and recommend_items must reproduce
     the distributed chains bit-for-bit — same fixture, gate on vs
@@ -304,13 +304,8 @@ def test_cf_driver_gate_parity(spark):
             recs.toPandas(),
         )
 
-    saved = rx.CF_DRIVER_MAX_ROWS
-    try:
-        rx.CF_DRIVER_MAX_ROWS = 2_000_000
-        on = _run()
-        rx.CF_DRIVER_MAX_ROWS = 0
+    on = _run()
+    with gate_off():
         off = _run()
-    finally:
-        rx.CF_DRIVER_MAX_ROWS = saved
     for a, b in zip(on, off):
         pd.testing.assert_frame_equal(a, b, check_exact=True)
